@@ -9,17 +9,14 @@ rounds, each round two shuffles (a groupBy-min and a join), no driver-side
 data movement.
 
 Scale notes (SURVEY.md §7 hard part 2):
-* ``localCheckpoint(eager=True)`` every iteration truncates the lineage —
-  without it the plan doubles per round and the driver OOMs planning
-  round ~15.
+* Each star round is one ``supersteps.fixpoint`` superstep (one job,
+  lineage truncated, fingerprint convergence — see supersteps.py); an
+  exhausted ``max_iter`` raises instead of returning a partial labeling.
 * Giant components make large-star groups skewed (the component hub
   accumulates all members as neighbors).  AQE skew-join handles the join
   side; the groupBy is a partial (map-side) min aggregation, so a hot key
   combines locally before the shuffle — the classic reason to prefer
   ``groupBy().agg(min)`` over ``Window``.
-* Convergence test is a cheap fingerprint (count + sum of xxhash64 over
-  canonical edges), not exceptAll: one extra aggregate per round vs a
-  full anti-join.
 
 API works on long node ids.  ``connected_components_str`` adapts string
 ids via xxhash64 (collision probability n^2/2^65; fine to ~10^8 nodes —
@@ -30,6 +27,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from graph_importer_spark.supersteps import fixpoint
 
 
 def _symmetrize(edges: DataFrame) -> DataFrame:
@@ -73,24 +72,6 @@ def _small_star(e: DataFrame) -> DataFrame:
     )
     self_link = mins.select(F.col("u"), F.col("m").alias("v"))
     return re_linked.unionByName(self_link).filter(F.col("u") != F.col("v")).distinct()
-
-
-def _checkpoint_fp(e: DataFrame) -> tuple[DataFrame, tuple[int, int]]:
-    """Eager localCheckpoint + convergence fingerprint in ONE action:
-    the Observation rides along with the checkpoint job, so each CC
-    round costs one job instead of two (the fingerprint alone was ~40%
-    of the loop's driver-blocking time on small graphs)."""
-    from pyspark.sql import Observation
-
-    obs = Observation()
-    observed = e.observe(
-        obs,
-        F.count(F.lit(1)).alias("c"),
-        F.coalesce(F.expr("bit_xor(xxhash64(u, v))"), F.lit(0)).alias("h"),
-    )
-    out = observed.localCheckpoint(eager=True)
-    got = obs.get
-    return out, (int(got["c"]), int(got["h"]))
 
 
 def connected_components_single(edges: DataFrame) -> DataFrame:
@@ -173,18 +154,17 @@ def connected_components(
     """
     if single_task:
         return connected_components_single(edges)
-    e, prev = _checkpoint_fp(
+    e, converged = fixpoint(
         edges.select(F.col("src").alias("u"), F.col("dst").alias("v"))
         .filter(F.col("u") != F.col("v"))
-        .distinct()
+        .distinct(),
+        lambda e: _small_star(_large_star(e)),
+        ["u", "v"],
+        max_iter,
+        on_iteration,
     )
-    for i in range(max_iter):
-        e, cur = _checkpoint_fp(_small_star(_large_star(e)))
-        if on_iteration is not None:
-            on_iteration(i, cur[0])
-        if cur == prev:
-            break
-        prev = cur
+    if not converged:
+        raise RuntimeError(f"connected_components did not settle within {max_iter} rounds")
     # e is now a star forest oriented child->root (u > v == root).
     roots = e.select(F.col("v").alias("id")).distinct().select(
         "id", F.col("id").alias("component")

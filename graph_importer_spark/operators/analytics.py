@@ -4,8 +4,9 @@ The reference only launches/monitors these server-side
 (start_Pregel.py:28-57 POST _api/control_pregel, catalog
 arguments.py:176-188: pagerank, sssp, connectedcomponents, wcc, ...).
 Here the ones the north star needs run as driver-orchestrated iterative
-DataFrame jobs — each superstep is a join + aggregate, lineage truncated
-per iteration with localCheckpoint (same discipline as cc.py).
+DataFrame jobs — each superstep is a join + aggregate run under the
+superstep rule of supersteps.py (one job, lineage truncated by an eager
+checkpoint, fingerprint convergence).
 
 Parameter mapping (reference G3/G4/G5, SURVEY.md §2.9):
   maxGSS -> max_iter; 'threshold' -> tol (PageRank convergence on the
@@ -25,6 +26,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from graph_importer_spark.cc import connected_components, connected_components_str  # noqa: F401  (wcc surface)
+from graph_importer_spark.supersteps import bfs, checkpoint, fixpoint
 
 
 def _vertices_of(edges: DataFrame) -> DataFrame:
@@ -48,8 +50,6 @@ def pagerank(
     match the reference's Pregel PageRank semantics
     (start_Pregel.py:195-199 threshold convergence).
     """
-    from pyspark.sql import Observation
-
     spark = edges.sparkSession
     deg = edges.groupBy("src").agg(F.count("*").alias("out_deg"))
     # static vertex frame with the dangling flag baked in: membership in
@@ -77,6 +77,28 @@ def pagerank(
     )
     ranks = verts.select("id", "is_dangling", F.lit(1.0).alias("rank"))
     dangling = float(head["nd"])  # every dangling vertex starts at rank 1.0
+    return _power_supersteps(
+        verts,
+        links,
+        ranks,
+        dangling,
+        lambda contrib, dangling: F.lit(1.0 - damping)
+        + F.lit(damping) * (contrib + F.lit(dangling / n)),
+        tol,
+        max_iter,
+        on_iteration,
+    )
+
+
+def _power_supersteps(verts, links, ranks, dangling, rank_of, tol, max_iter, on_iteration=None):
+    """The pagerank / personalized_pagerank superstep loop: ``links``
+    (src, dst, out_deg) spread each rank over its out-edges,
+    ``rank_of(contrib, dangling)`` is the new rank of a vertex given its
+    summed in-contribution and the previous superstep's dangling mass.
+    The convergence delta and the NEXT superstep's dangling mass ride the
+    checkpoint job, so each superstep is one action.  Stops when the
+    L-inf delta falls below ``tol``.  -> (id, rank)."""
+    cols = [*verts.columns, "rank"]
     for i in range(max_iter):
         contribs = (
             links.join(ranks.select(F.col("id").alias("src"), "rank"), "src")
@@ -84,38 +106,17 @@ def pagerank(
             .groupBy("dst")
             .agg(F.sum("c").alias("contrib"))
         )
-        new_ranks = (
-            verts.join(contribs.withColumnRenamed("dst", "id"), "id", "left")
-            .select(
-                "id",
-                "is_dangling",
-                (
-                    F.lit(1.0 - damping)
-                    + F.lit(damping)
-                    * (F.coalesce(F.col("contrib"), F.lit(0.0)) + F.lit(dangling / n))
-                ).alias("rank"),
-            )
+        new_ranks = verts.join(contribs.withColumnRenamed("dst", "id"), "id", "left").select(
+            *verts.columns,
+            rank_of(F.coalesce(F.col("contrib"), F.lit(0.0)), dangling).alias("rank"),
         )
-        # ONE action per superstep: the convergence delta and the NEXT
-        # iteration's dangling mass ride the checkpoint job as an
-        # Observation (same discipline as cc._checkpoint_fp) instead of
-        # two extra scalar collects.
-        obs = Observation()
-        joined = (
-            new_ranks.join(ranks.select("id", F.col("rank").alias("old")), "id")
-            .observe(
-                obs,
-                F.max(F.abs(F.col("rank") - F.col("old"))).alias("delta"),
-                F.coalesce(
-                    F.sum(F.when(F.col("is_dangling"), F.col("rank"))), F.lit(0.0)
-                ).alias("dangling"),
-            )
-            .select("id", "is_dangling", "rank")
-            .localCheckpoint(eager=True)
+        joined, got = checkpoint(
+            new_ranks.join(ranks.select("id", F.col("rank").alias("old")), "id"),
+            delta=F.max(F.abs(F.col("rank") - F.col("old"))),
+            dangling=F.coalesce(F.sum(F.when(F.col("is_dangling"), F.col("rank"))), F.lit(0.0)),
         )
-        got = obs.get
         delta, dangling = float(got["delta"]), float(got["dangling"])
-        ranks = joined
+        ranks = joined.select(*cols)
         if on_iteration is not None:
             on_iteration(i, delta)
         if delta < tol:
@@ -140,50 +141,15 @@ def sssp(
     e = edges.select("src", "dst", w.alias("w")).localCheckpoint(eager=True)
     spark = edges.sparkSession
 
-    def fp(df) -> tuple[int, int]:
-        # cheap convergence fingerprint (count + xor of row hashes):
-        # one aggregate per superstep instead of a join + count
-        r = df.agg(
-            F.count("*").alias("c"),
-            F.coalesce(F.expr("bit_xor(xxhash64(id, dist))"), F.lit(0)).alias("h"),
-        ).collect()[0]
-        return int(r["c"]), int(r["h"])
-
-    dists = spark.createDataFrame([(source, 0.0)], "id long, dist double")
-    prev = fp(dists)
-    for _ in range(max_iter):
+    def relax(dists):
         relaxed = (
             e.join(dists.withColumnRenamed("id", "src"), "src")
             .select(F.col("dst").alias("id"), (F.col("dist") + F.col("w")).alias("dist"))
         )
-        new_dists = (
-            dists.unionByName(relaxed)
-            .groupBy("id")
-            .agg(F.min("dist").alias("dist"))
-            .localCheckpoint(eager=True)
-        )
-        cur = fp(new_dists)
-        dists = new_dists
-        if cur == prev:
-            break
-        prev = cur
-    return dists
+        return dists.unionByName(relaxed).groupBy("id").agg(F.min("dist").alias("dist"))
 
-
-def _fp(df: DataFrame, cols: list[str]) -> tuple[DataFrame, tuple[int, int]]:
-    """Eager localCheckpoint + (count, xor-hash) fingerprint in one job
-    (cc._checkpoint_fp generalized to arbitrary key columns)."""
-    from pyspark.sql import Observation
-
-    obs = Observation()
-    observed = df.observe(
-        obs,
-        F.count(F.lit(1)).alias("c"),
-        F.coalesce(F.expr(f"bit_xor(xxhash64({', '.join(cols)}))"), F.lit(0)).alias("h"),
-    )
-    out = observed.localCheckpoint(eager=True)
-    got = obs.get
-    return out, (int(got["c"]), int(got["h"]))
+    dists = spark.createDataFrame([(source, 0.0)], "id long, dist double")
+    return fixpoint(dists, relax, ["id", "dist"], max_iter)[0]
 
 
 def strongly_connected_components(edges: DataFrame, max_iter: int = 30) -> DataFrame:
@@ -222,98 +188,101 @@ def strongly_connected_components(edges: DataFrame, max_iter: int = 30) -> DataF
     are fine; for an adversarial chain raise ``max_iter`` (the loop
     raises rather than hangs when the budget is exhausted).
 
-    Every superstep localCheckpoints with an Observation-fused
-    convergence fingerprint (one job per superstep, lineage truncated) —
-    the same scale discipline as cc.py.
+    Every superstep follows the superstep rule of supersteps.py; an
+    exhausted budget in any of the loops raises.
     """
-    e0 = (
-        edges.select("src", "dst")
-        .filter(F.col("src") != F.col("dst"))
-        .distinct()
-        .localCheckpoint(eager=True)
+    e, _ = checkpoint(
+        edges.select("src", "dst").filter(F.col("src") != F.col("dst")).distinct()
     )
-    verts = _vertices_of(edges).localCheckpoint(eager=True)
+    remaining, got = checkpoint(_vertices_of(edges), n=F.count(F.lit(1)))
+    n_remaining = got["n"]
     spark = edges.sparkSession
     assigned = spark.createDataFrame([], "id long, scc long")
-    remaining = verts
-    e = e0
+
+    def settled(loop: str, converged: bool) -> None:
+        if not converged:
+            raise RuntimeError(f"scc {loop} did not settle within {max_iter} supersteps")
+
     for _outer in range(max_iter):
-        if remaining.isEmpty():
+        if n_remaining == 0:
             break
         # 0) trim fixpoint: peel in-deg-0 / out-deg-0 vertices (each is
-        # a singleton SCC) before paying for coloring supersteps
+        # a singleton SCC) before paying for coloring supersteps; the
+        # core's size rides its checkpoint, so an unchanged size ends it
         for _trim in range(max_iter):
             has_out = e.select(F.col("src").alias("id")).distinct()
             has_in = e.select(F.col("dst").alias("id")).distinct()
-            core, _ = _fp(
-                remaining.join(has_out, "id", "left_semi").join(
-                    has_in, "id", "left_semi"
-                ),
-                ["id"],
+            core, got = checkpoint(
+                remaining.join(has_out, "id", "left_semi").join(has_in, "id", "left_semi"),
+                n=F.count(F.lit(1)),
             )
-            trimmed = remaining.join(core, "id", "left_anti")
-            if trimmed.isEmpty():
-                remaining = core
+            if got["n"] == n_remaining:
                 break
-            assigned = assigned.unionByName(
-                trimmed.select("id", F.col("id").alias("scc"))
-            ).localCheckpoint(eager=True)
-            remaining = core
-            e = (
+            assigned, _ = checkpoint(
+                assigned.unionByName(
+                    remaining.join(core, "id", "left_anti").select("id", F.col("id").alias("scc"))
+                )
+            )
+            remaining, n_remaining = core, got["n"]
+            e, _ = checkpoint(
                 e.join(core.withColumnRenamed("id", "src"), "src", "left_semi")
                 .join(core.withColumnRenamed("id", "dst"), "dst", "left_semi")
                 .select("src", "dst")
-                .localCheckpoint(eager=True)
             )
-        if remaining.isEmpty():
+        if n_remaining == 0:
             break
+
         # 1) forward min-color propagation on the remaining subgraph
-        colors, prev = _fp(remaining.select("id", F.col("id").alias("color")), ["id", "color"])
-        for _ in range(max_iter):
+        def forward(colors):
             contribs = (
                 e.join(colors.select(F.col("id").alias("src"), "color"), "src")
                 .groupBy("dst")
                 .agg(F.min("color").alias("in_color"))
                 .withColumnRenamed("dst", "id")
             )
-            colors, cur = _fp(
-                colors.join(contribs, "id", "left").select(
-                    "id", F.least("color", F.coalesce("in_color", "color")).alias("color")
-                ),
-                ["id", "color"],
+            return colors.join(contribs, "id", "left").select(
+                "id", F.least("color", F.coalesce("in_color", "color")).alias("color")
             )
-            if cur == prev:
-                break
-            prev = cur
-        # 2) backward closure of each root within its color class
-        closure, prev = _fp(
-            colors.filter(F.col("color") == F.col("id")).select("id", F.col("id").alias("root")),
-            ["id", "root"],
+
+        colors, converged = fixpoint(
+            remaining.select("id", F.col("id").alias("color")), forward, ["id", "color"], max_iter
         )
-        tails = e.join(colors.select(F.col("id").alias("src"), F.col("color").alias("src_color")), "src")
-        for _ in range(max_iter):
+        settled("coloring", converged)
+        # 2) backward closure of each root within its color class
+        tails = e.join(
+            colors.select(F.col("id").alias("src"), F.col("color").alias("src_color")), "src"
+        )
+
+        def backward(closure):
             preds = (
                 tails.join(closure.select(F.col("id").alias("dst"), "root"), "dst")
                 .filter(F.col("src_color") == F.col("root"))
                 .select(F.col("src").alias("id"), "root")
             )
-            closure, cur = _fp(closure.unionByName(preds).distinct(), ["id", "root"])
-            if cur == prev:
-                break
-            prev = cur
-        assigned = assigned.unionByName(
-            closure.select("id", F.col("root").alias("scc"))
-        ).localCheckpoint(eager=True)
-        remaining = remaining.join(closure, "id", "left_anti").localCheckpoint(eager=True)
+            return closure.unionByName(preds).distinct()
+
+        closure, converged = fixpoint(
+            colors.filter(F.col("color") == F.col("id")).select("id", F.col("id").alias("root")),
+            backward,
+            ["id", "root"],
+            max_iter,
+        )
+        settled("closure", converged)
+        assigned, _ = checkpoint(
+            assigned.unionByName(closure.select("id", F.col("root").alias("scc")))
+        )
+        remaining, got = checkpoint(
+            remaining.join(closure, "id", "left_anti"), n=F.count(F.lit(1))
+        )
+        n_remaining = got["n"]
         done = closure.select(F.col("id").alias("gone"))
-        e = (
+        e, _ = checkpoint(
             e.join(done.withColumnRenamed("gone", "src"), "src", "left_anti")
             .join(done.withColumnRenamed("gone", "dst"), "dst", "left_anti")
             .select("src", "dst")
-            .localCheckpoint(eager=True)
         )
     else:
-        if not remaining.isEmpty():
+        if n_remaining:
             raise RuntimeError(f"scc did not settle within {max_iter} rounds")
     return assigned
 
@@ -332,8 +301,6 @@ def hits(edges: DataFrame, max_iter: int = 10) -> DataFrame:
     join+groupBy-sum pairs (map-side partials absorb hub pages) and one
     Observation-fused checkpoint.
     """
-    from pyspark.sql import Observation
-
     e = edges.select("src", "dst").distinct().localCheckpoint(eager=True)
     verts = _vertices_of(e).localCheckpoint(eager=True)
     n = verts.count()
@@ -365,11 +332,7 @@ def hits(edges: DataFrame, max_iter: int = 10) -> DataFrame:
                 F.coalesce("a_raw", F.lit(0.0)).alias("a_raw"),
             )
         )
-        obs = Observation()
-        raw = raw.observe(
-            obs, F.sum("h_raw").alias("hs"), F.sum("a_raw").alias("as_")
-        ).localCheckpoint(eager=True)
-        got = obs.get
+        raw, got = checkpoint(raw, hs=F.sum("h_raw"), as_=F.sum("a_raw"))
         hs, as_ = float(got["hs"]), float(got["as_"])
         if hs == 0.0 or as_ == 0.0:
             break  # no edges touched: scores are already the fixpoint
@@ -396,8 +359,6 @@ def linerank(edges: DataFrame, damping: float = 0.85, max_iter: int = 10) -> Dat
     computation.  Returns (id, linerank); sum(rank over edges) == 1 per
     superstep up to float association.
     """
-    from pyspark.sql import Observation
-
     spark = edges.sparkSession
     e = edges.select("src", "dst").distinct()
     # out_deg at the HEAD vertex: how many line-graph successors (v,w)
@@ -437,18 +398,11 @@ def linerank(edges: DataFrame, damping: float = 0.85, max_iter: int = 10) -> Dat
                 * (F.coalesce(F.col("s"), F.lit(0.0)) + F.lit(dangling / m))
             ).alias("rank"),
         )
-        obs = Observation()
-        ranks = (
-            new_ranks.observe(
-                obs,
-                F.coalesce(
-                    F.sum(F.when(F.col("out_deg").isNull(), F.col("rank"))),
-                    F.lit(0.0),
-                ).alias("dang"),
-            )
-            .localCheckpoint(eager=True)
+        ranks, got = checkpoint(
+            new_ranks,
+            dang=F.coalesce(F.sum(F.when(F.col("out_deg").isNull(), F.col("rank"))), F.lit(0.0)),
         )
-        dangling = float(obs.get["dang"])
+        dangling = float(got["dang"])
     return (
         ranks.select(F.col("src").alias("id"), "rank")
         .unionByName(ranks.select(F.col("dst").alias("id"), "rank"))
@@ -480,13 +434,7 @@ def effective_closeness(
     SQL bit-for-bit."""
     from graph_importer_spark.operators.generators import _A, _A2, _M, _M2
 
-    sym = (
-        edges.select("src", "dst")
-        .unionByName(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        .filter(F.col("src") != F.col("dst"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    sym, _ = checkpoint(_adjacency(edges))
     verts = _vertices_of(sym)
     regs = verts.sparkSession.range(registers).select(F.col("id").alias("reg"))
     # init: self-only sketch, one geometric bit per register.  Two
@@ -524,36 +472,35 @@ def effective_closeness(
     est = lambda s: s.groupBy("id").agg(  # noqa: E731
         (F.pow(F.lit(2.0), F.avg(z)) / F.lit(0.77351)).alias("est")
     )
-    sk, prev = _fp(sk, ["id", "reg", "mask"])
-    acc = (
-        est(sk)
-        .select("id", F.col("est").alias("prev_est"), F.lit(0.0).alias("sum_dist"))
-        .localCheckpoint(eager=True)
-    )
-    for k in range(1, max_iter + 1):
-        merged = sym.join(
-            sk.withColumnRenamed("id", "dst"), "dst"
-        ).select(F.col("src").alias("id"), "reg", "mask")
-        sk, cur = _fp(
-            sk.unionByName(merged).groupBy("id", "reg").agg(
-                F.expr("bit_or(mask)").alias("mask")
-            ),
-            ["id", "reg", "mask"],
-        )
-        acc = (
-            acc.join(est(sk), "id")
-            .select(
+    acc, hops = None, 0
+
+    def accrue(sk):  # fold hop ``hops``'s estimates into sum_dist
+        nonlocal acc
+        if acc is None:
+            acc = est(sk).select(
+                "id", F.col("est").alias("prev_est"), F.lit(0.0).alias("sum_dist")
+            )
+        else:
+            acc = acc.join(est(sk), "id").select(
                 "id",
                 F.col("est").alias("prev_est"),
                 (
-                    F.col("sum_dist") + F.lit(float(k)) * (F.col("est") - F.col("prev_est"))
+                    F.col("sum_dist") + F.lit(float(hops)) * (F.col("est") - F.col("prev_est"))
                 ).alias("sum_dist"),
             )
-            .localCheckpoint(eager=True)
+        acc, _ = checkpoint(acc)
+
+    def merge(sk):
+        nonlocal hops
+        accrue(sk)
+        hops += 1
+        merged = sym.join(sk.withColumnRenamed("id", "dst"), "dst").select(
+            F.col("src").alias("id"), "reg", "mask"
         )
-        if cur == prev:
-            break
-        prev = cur
+        return sk.unionByName(merged).groupBy("id", "reg").agg(F.expr("bit_or(mask)").alias("mask"))
+
+    sk, _ = fixpoint(sk, merge, ["id", "reg", "mask"], max_iter)
+    accrue(sk)
     return acc.select(
         "id",
         F.when(
@@ -591,15 +538,7 @@ def slpa(
     all-pairs, no per-row Python."""
     from graph_importer_spark.operators.generators import _A, _A2, _M
 
-    sym = (
-        edges.select("src", "dst")
-        .unionByName(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        .filter(F.col("src") != F.col("dst"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    from pyspark.sql import Window
-
+    sym, _ = checkpoint(_adjacency(edges))
     mem = _vertices_of(sym).select(
         "id", F.col("id").alias("label"), F.lit(1).cast("long").alias("cnt")
     )
@@ -666,28 +605,21 @@ def label_propagation(edges: DataFrame, max_iter: int = 10) -> DataFrame:
     sym = edges.select("src", "dst").unionByName(
         edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     ).distinct().localCheckpoint(eager=True)
-    labels = _vertices_of(edges).select("id", F.col("id").alias("label"))
-    for _ in range(max_iter):
+
+    def adopt(labels):
         freq = (
             sym.join(labels.withColumnRenamed("id", "dst"), "dst")
             .groupBy("src", "label")
             .agg(F.count("*").alias("cnt"))
         )
-        new_labels = (
+        return (
             freq.groupBy("src")
             .agg(F.expr("min_by(label, struct(-cnt, label))").alias("label"))
             .withColumnRenamed("src", "id")
-            .localCheckpoint(eager=True)
         )
-        same = (
-            new_labels.join(labels.withColumnRenamed("label", "old"), "id")
-            .filter(F.col("label") != F.col("old"))
-            .count()
-        )
-        labels = new_labels
-        if same == 0:
-            break
-    return labels
+
+    labels = _vertices_of(edges).select("id", F.col("id").alias("label"))
+    return fixpoint(labels, adopt, ["id", "label"], max_iter)[0]
 
 
 def _undirected(edges: DataFrame) -> DataFrame:
@@ -699,6 +631,15 @@ def _undirected(edges: DataFrame) -> DataFrame:
         )
         .filter(F.col("a") != F.col("b"))
         .distinct()
+    )
+
+
+def _adjacency(edges: DataFrame) -> DataFrame:
+    """Both directions of the undirected simple graph: (src, dst) and
+    (dst, src) for every canonical edge — distinct, no self-loops."""
+    und = _undirected(edges)
+    return und.select(F.col("a").alias("src"), F.col("b").alias("dst")).unionByName(
+        und.select(F.col("b").alias("src"), F.col("a").alias("dst"))
     )
 
 
@@ -767,37 +708,26 @@ def kcore(edges: DataFrame, k: int, max_iter: int = 50) -> DataFrame:
 
     Each peel round is one degree aggregation (map-side partials) plus
     two left-semi joins restricting the symmetric adjacency to
-    survivors; the frame localCheckpoints with an Observation-fused
-    fingerprint per round (one job, truncated lineage — the cc.py
-    discipline).  Rounds are bounded by the peel depth (the graph's
-    degeneracy ordering height), tiny for web-like graphs; the
+    survivors, run as one ``supersteps.fixpoint`` superstep.  Rounds
+    are bounded by the peel depth (the graph's degeneracy ordering
+    height), tiny for web-like graphs; the
     synchronous peel is idempotent at its fixpoint, so a fixed-iteration
     SQL replay at any round >= convergence matches exactly.
     """
-    und = _undirected(edges)
-    sym = (
-        und.select(F.col("a").alias("u"), F.col("b").alias("v"))
-        .unionByName(und.select(F.col("b").alias("u"), F.col("a").alias("v")))
-        .localCheckpoint(eager=True)
-    )
-    cur, prev = _fp(sym, ["u", "v"])
-    for _ in range(max_iter):
+
+    def peel(cur):
         keep = (
             cur.groupBy("u")
             .agg(F.count("*").alias("deg"))
             .filter(F.col("deg") >= k)
             .select("u")
         )
-        cur, fp = _fp(
-            cur.join(keep, "u", "left_semi").join(
-                keep.withColumnRenamed("u", "v"), "v", "left_semi"
-            ),
-            ["u", "v"],
+        return cur.join(keep, "u", "left_semi").join(
+            keep.withColumnRenamed("u", "v"), "v", "left_semi"
         )
-        if fp == prev:
-            break
-        prev = fp
-    else:
+
+    cur, converged = fixpoint(_adjacency(edges).toDF("u", "v"), peel, ["u", "v"], max_iter)
+    if not converged:
         raise RuntimeError(f"kcore did not settle within {max_iter} rounds")
     return cur.groupBy(F.col("u").alias("id")).agg(F.count("*").alias("deg"))
 
@@ -821,30 +751,14 @@ def k_hop(
     the visited set -> distinct.  The frontier is keyed on ``src``
     (hub-skewed at web scale — AQE's skew split covers the join, and a
     hub expands once because the visited anti-join removes it from
-    every later frontier).  The visited set is carried as a
-    localCheckpoint per round — same loop-lineage hygiene as the CC
-    driver (cc.py), cost one job per hop, plans stay O(1) deep.
+    every later frontier).  ``supersteps.bfs``: one job per hop, and
+    the loop ends early once the frontier is empty.
     """
     if k < 0:
         raise ValueError("k must be >= 0")
-    visited = (
-        sources.select(F.col(sources.columns[0]).alias("id"))
-        .distinct()
-        .withColumn("hops", F.lit(0))
-        .localCheckpoint(eager=True)
-    )
-    frontier = visited.select("id")
-    for depth in range(1, k + 1):
-        nxt = (
-            frontier.join(edges, frontier.id == edges[src])
-            .select(F.col(dst).alias("id"))
-            .distinct()
-            .join(visited, "id", "left_anti")
-            .withColumn("hops", F.lit(depth))
-        )
-        visited = visited.unionByName(nxt).localCheckpoint(eager=True)
-        frontier = visited.filter(F.col("hops") == depth).select("id")
-    return visited
+    start = sources.select(F.col(sources.columns[0]).alias("id")).distinct()
+    adj = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
+    return bfs(adj, start, k).withColumnRenamed("d", "hops")
 
 
 def random_walks(
@@ -868,7 +782,7 @@ def random_walks(
     equi-join — with map-side partials, so a hub node's millions of
     out-edges are reduced inside each partition before the exchange
     (the per-key window/sort trap never appears).  ``length`` stages,
-    lineage cut per step like the CC loop.  Dead ends stop early
+    lineage cut per step (supersteps.py rule).  Dead ends stop early
     (walks shorter than ``length`` are the documented DeepWalk
     behavior on directed graphs).
 
@@ -1059,16 +973,13 @@ def personalized_pagerank(
     (1-d)*restart(v) + d*(sum_in contribs + dangling_mass*restart(v)) —
     dangling mass restarts onto the seed set, the PPR convention.
 
-    Same per-superstep shape as ``pagerank``: the static (src, dst,
-    out_deg) link frame is checkpointed once; each round is one
-    contribution shuffle keyed on dst plus an Observation-fused
-    convergence/dangling job (one action per round).  The seed list is
-    driver metadata baked into the vertex frame as a literal IN — at a
+    Same supersteps as ``pagerank`` (``_power_supersteps``): the static
+    (src, dst, out_deg) link frame is checkpointed once; each round is
+    one contribution shuffle keyed on dst and one action.  The seed
+    list is driver metadata baked into the vertex frame as a literal IN — at a
     realistic |S| (10s-1000s of trusted seeds) that is a broadcast-
     scale constant, never a corpus shuffle.
     """
-    from pyspark.sql import Observation
-
     if not sources:
         raise ValueError("sources must be non-empty")
     spark = edges.sparkSession
@@ -1094,54 +1005,21 @@ def personalized_pagerank(
     ranks = verts.select(
         "id", "is_dangling", "restart", F.col("restart").alias("rank")
     )
-    dangling = 0.0  # seeds have out-edges in round 0 or contribute below
     head = ranks.agg(
         F.coalesce(
             F.sum(F.when(F.col("is_dangling"), F.col("rank"))), F.lit(0.0)
         ).alias("d0")
     ).collect()[0]
-    dangling = float(head["d0"])
-    for _ in range(max_iter):
-        contribs = (
-            links.join(ranks.select(F.col("id").alias("src"), "rank"), "src")
-            .select("dst", (F.col("rank") / F.col("out_deg")).alias("c"))
-            .groupBy("dst")
-            .agg(F.sum("c").alias("contrib"))
-        )
-        new_ranks = verts.join(
-            contribs.withColumnRenamed("dst", "id"), "id", "left"
-        ).select(
-            "id",
-            "is_dangling",
-            "restart",
-            (
-                F.lit(1.0 - damping) * F.col("restart")
-                + F.lit(damping)
-                * (
-                    F.coalesce(F.col("contrib"), F.lit(0.0))
-                    + F.lit(dangling) * F.col("restart")
-                )
-            ).alias("rank"),
-        )
-        obs = Observation()
-        joined = (
-            new_ranks.join(ranks.select("id", F.col("rank").alias("old")), "id")
-            .observe(
-                obs,
-                F.max(F.abs(F.col("rank") - F.col("old"))).alias("delta"),
-                F.coalesce(
-                    F.sum(F.when(F.col("is_dangling"), F.col("rank"))), F.lit(0.0)
-                ).alias("dangling"),
-            )
-            .select("id", "is_dangling", "restart", "rank")
-            .localCheckpoint(eager=True)
-        )
-        got = obs.get
-        delta, dangling = float(got["delta"]), float(got["dangling"])
-        ranks = joined
-        if delta < tol:
-            break
-    return ranks.select("id", "rank")
+    return _power_supersteps(
+        verts,
+        links,
+        ranks,
+        float(head["d0"]),
+        lambda contrib, dangling: F.lit(1.0 - damping) * F.col("restart")
+        + F.lit(damping) * (contrib + F.lit(dangling) * F.col("restart")),
+        tol,
+        max_iter,
+    )
 
 
 def _edge_support(und: DataFrame) -> DataFrame:
@@ -1201,8 +1079,8 @@ def ktruss(edges: DataFrame, k: int, max_iter: int = 50) -> DataFrame:
 
     Each peel round is one triangle enumeration over the surviving
     edges (the degree-ordered O(m^1.5) wedge join — the same bound as
-    triangle_count, shrinking every round) plus an Observation-fused
-    fingerprint checkpoint (one action per round, truncated lineage).
+    triangle_count, shrinking every round) as one
+    ``supersteps.fixpoint`` superstep.
     Rounds are bounded by the peel depth, tiny for web-like graphs.
     The synchronous peel is idempotent at its fixpoint, so a
     fixed-iteration SQL replay at any round >= convergence matches
@@ -1210,18 +1088,12 @@ def ktruss(edges: DataFrame, k: int, max_iter: int = 50) -> DataFrame:
     """
     if k < 2:
         raise ValueError("k must be >= 2")
-    cur, prev = _fp(_undirected(edges), ["a", "b"])
-    for _ in range(max_iter):
-        kept = (
-            _edge_support(cur)
-            .filter(F.col("support") >= k - 2)
-            .select("a", "b")
-        )
-        cur, fp = _fp(kept, ["a", "b"])
-        if fp == prev:
-            break
-        prev = fp
-    else:
+
+    def peel(cur):
+        return _edge_support(cur).filter(F.col("support") >= k - 2).select("a", "b")
+
+    cur, converged = fixpoint(_undirected(edges), peel, ["a", "b"], max_iter)
+    if not converged:
         raise RuntimeError(f"ktruss did not settle within {max_iter} rounds")
     return _edge_support(cur)
 
@@ -1291,10 +1163,9 @@ def transitive_closure(
     every path of length <= 2^r, so a hierarchy of depth d closes in
     ceil(log2(d)) joins instead of d (Valduriez & Boral '86 /
     "smart" transitive closure).  Each round is one self-equi-join on
-    the frontier midpoint + union + distinct; convergence is detected
-    with the Observation-fused (count, xor-hash) fingerprint (one job
-    per round, no extra count() pass), and lineage is truncated per
-    round via localCheckpoint — the same loop hygiene as cc.py.
+    the frontier midpoint + union + distinct, run as one
+    ``supersteps.fixpoint`` superstep; an exhausted ``max_iter`` raises
+    rather than returning a truncated closure.
 
     Scale shape: the join keys on the midpoint vertex; hub vertices
     (power-law at web scale) are exactly AQE skew-join territory and
@@ -1305,27 +1176,24 @@ def transitive_closure(
     full web graph; callers pre-filter edges to the hierarchy
     predicate, which Spark pushes to the triple scan.
     """
-    paths = (
-        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-        .filter(F.col("src") != F.col("dst"))
-        .distinct()
-    )
-    paths, fp = _fp(paths, ["src", "dst"])
-    for _ in range(max_iter):
+
+    def double(paths):
         hop = paths.select(F.col("dst").alias("mid"), F.col("src"))
         ext = paths.select(F.col("src").alias("mid"), F.col("dst"))
-        doubled = (
-            paths.unionByName(
-                hop.join(ext, "mid")
-                .select("src", "dst")
-                .filter(F.col("src") != F.col("dst"))
-            )
-            .distinct()
-        )
-        doubled, new_fp = _fp(doubled, ["src", "dst"])
-        if new_fp == fp:
-            return paths
-        paths, fp = doubled, new_fp
+        return paths.unionByName(
+            hop.join(ext, "mid").select("src", "dst").filter(F.col("src") != F.col("dst"))
+        ).distinct()
+
+    paths, converged = fixpoint(
+        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
+        .filter(F.col("src") != F.col("dst"))
+        .distinct(),
+        double,
+        ["src", "dst"],
+        max_iter,
+    )
+    if not converged:
+        raise RuntimeError(f"transitive_closure did not settle within {max_iter} rounds")
     return paths
 
 
@@ -1776,10 +1644,7 @@ def wl_relabel(edges: DataFrame, rounds: int = 2) -> DataFrame:
     usual AQE skew territory).  Rounds are a fixed small constant —
     r-hop locality, not convergence iteration.
     """
-    und = _undirected(edges)
-    adj = und.select(F.col("a").alias("id"), F.col("b").alias("nb")).unionByName(
-        und.select(F.col("b").alias("id"), F.col("a").alias("nb"))
-    )
+    adj = _adjacency(edges).toDF("id", "nb")
     labels = adj.groupBy("id").agg(
         F.count("*").cast("string").alias("label")
     )
@@ -1991,10 +1856,7 @@ def simrank_pairs(
     on pre-filtered subgraphs.  All sums are keyed partial aggregates;
     no windows.
     """
-    und = _undirected(edges)  # canonical (a, b), a < b
-    adj = und.select(F.col("a").alias("u"), F.col("b").alias("v")).unionByName(
-        und.select(F.col("b").alias("u"), F.col("a").alias("v"))
-    )
+    adj = _adjacency(edges).toDF("u", "v")
     if max_degree is not None:
         w = Window.partitionBy("u").orderBy(
             F.md5(F.concat_ws("|", F.col("u"), F.col("v"))).asc()
@@ -2100,15 +1962,11 @@ def harmonic_centrality_sampled(
 
     Scale shape: the frontier carries (source, vertex) keys — state is
     O(n_sources x |V_reached|), the standard multi-source BFS
-    trade; each round is one frontier-keyed join + one anti-join
-    against the visited set with per-round localCheckpoint (the CC
-    loop's lineage hygiene).  Sources are TakeOrdered-selected (no
-    global sort materialization).
+    trade; each hop is one ``supersteps.bfs`` superstep (frontier-keyed
+    join + anti-join against the visited set, one job).  Sources are
+    TakeOrdered-selected (no global sort materialization).
     """
-    cu = _undirected(edges)  # canonical (a, b), a < b
-    und = cu.select(
-        F.col("a").alias("src"), F.col("b").alias("dst")
-    ).unionByName(cu.select(F.col("b").alias("src"), F.col("a").alias("dst")))
+    und = _adjacency(edges)
     verts = und.select(F.col("src").alias("id")).distinct()
     srcs = (
         verts.orderBy(
@@ -2117,23 +1975,10 @@ def harmonic_centrality_sampled(
         .limit(n_sources)
         .select(F.col("id").alias("s"))
     )
-    frontier = srcs.select("s", F.col("s").alias("v"), F.lit(0).alias("d"))
-    visited = frontier
-    for hop in range(1, max_hops + 1):
-        nxt = (
-            frontier.join(und, frontier["v"] == und["src"])
-            .select("s", F.col("dst").alias("v"), F.lit(hop).alias("d"))
-            .distinct()
-            .join(visited.select("s", "v"), ["s", "v"], "left_anti")
-        )
-        nxt = nxt.localCheckpoint(eager=True)
-        if nxt.isEmpty():
-            break
-        visited = visited.unionByName(nxt).localCheckpoint(eager=True)
-        frontier = nxt
+    visited = bfs(und, srcs.select("s", F.col("s").alias("id")), max_hops)
     reached = visited.filter(F.col("d") > 0)
     return (
-        reached.groupBy(F.col("v").alias("id"))
+        reached.groupBy("id")
         .agg(
             F.count("*").alias("n_reached"),
             F.round(
@@ -2172,13 +2017,11 @@ def luby_mis(
     ``round`` = 1-based deactivation round (NULL for undecided).
 
     Scale shape: per round, ONE neighbor-min aggregate (partial-agg
-    absorbs hub fan-in) + two anti-joins, frontier-checkpointed like
-    the CC loop; the MIS/dominated outputs accumulate out-of-loop.
+    absorbs hub fan-in) + two anti-joins, the frontier checkpointed
+    every round (supersteps.py); the MIS/dominated outputs accumulate
+    out-of-loop.
     """
-    cu = _undirected(edges)
-    adj = cu.select(F.col("a").alias("u"), F.col("b").alias("v")).unionByName(
-        cu.select(F.col("b").alias("u"), F.col("a").alias("v"))
-    )
+    adj = _adjacency(edges).toDF("u", "v")
     active = (
         adj.select(F.col("u").alias("id")).distinct().localCheckpoint(eager=True)
     )
@@ -2254,34 +2097,12 @@ def double_sweep_diameter(
     ecc1 == max_hops, the bound may be truncated), ``n_reached_2``
     sweep 2's reach for a connectivity sanity check.
 
-    Scale shape: two BFS loops of the k_hop kind (frontier join +
-    visited anti-join, localCheckpoint per round) — each round is one
-    shuffle of the frontier, the full corpus never re-shuffles; the
-    per-sweep argmax is a 1-row scalar aggregate (max_by), not a
-    sort.
+    Scale shape: two ``supersteps.bfs`` loops (frontier join + visited
+    anti-join, one job per hop) — each hop is one shuffle of the
+    frontier, the full corpus never re-shuffles; the per-sweep argmax
+    is a 1-row scalar aggregate (max_by), not a sort.
     """
-    cu = _undirected(edges)
-    und = cu.select(
-        F.col("a").alias("src"), F.col("b").alias("dst")
-    ).unionByName(cu.select(F.col("b").alias("src"), F.col("a").alias("dst")))
-
-    def bfs(start_df):
-        frontier = start_df.select(F.col("id"), F.lit(0).alias("d"))
-        visited = frontier
-        for hop in range(1, max_hops + 1):
-            nxt = (
-                frontier.join(und, frontier["id"] == und["src"])
-                .select(F.col("dst").alias("id"), F.lit(hop).alias("d"))
-                .distinct()
-                .join(visited.select("id"), ["id"], "left_anti")
-                .localCheckpoint(eager=True)
-            )
-            if nxt.isEmpty():
-                break
-            visited = visited.unionByName(nxt).localCheckpoint(eager=True)
-            frontier = nxt
-        return visited
-
+    und = _adjacency(edges)
     verts = und.select(F.col("src").alias("id")).distinct()
     start = (
         verts.orderBy(
@@ -2289,12 +2110,12 @@ def double_sweep_diameter(
         )
         .limit(1)
     )
-    v1 = bfs(start)
+    v1 = bfs(und, start, max_hops)
     far = v1.groupBy().agg(
         F.expr("max_by(id, struct(d, -id))").alias("id"),
         F.max("d").alias("ecc1"),
     )
-    v2 = bfs(far.select("id"))
+    v2 = bfs(und, far.select("id"), max_hops)
     s2 = v2.groupBy().agg(
         F.max("d").alias("diameter_lb"), F.count("*").alias("n_reached_2")
     )
@@ -2357,36 +2178,34 @@ def shortest_path_trace(
     unreachable within ``max_hops``.
 
     Scale shape: the BFS is the k_hop loop (frontier join + visited
-    anti-join + per-round checkpoint) carrying one extra min_by
-    (parent) column; backtracking joins the dist-keyed visited table
+    anti-join) carrying one extra min (parent) column and stopping at
+    the target, so it keeps its own loop; each hop is one
+    ``supersteps.checkpoint`` job that also counts the frontier and the
+    target hits; backtracking joins the dist-keyed visited table
     <= dist times on single-row frames.
     """
-    cu = _undirected(edges)
-    und = cu.select(
-        F.col("a").alias("src"), F.col("b").alias("dst")
-    ).unionByName(cu.select(F.col("b").alias("src"), F.col("a").alias("dst")))
+    und = _adjacency(edges)
     spark = edges.sparkSession
     frontier = spark.createDataFrame(
         [(src_id, 0, None)], "id long, d int, parent long"
     )
     visited = frontier
-    found = None
     for hop in range(1, max_hops + 1):
-        nxt = (
+        nxt, got = checkpoint(
             frontier.join(und, frontier["id"] == und["src"])
             .groupBy(F.col("dst").alias("id"))
             .agg(F.min(frontier["id"]).alias("parent"))
             .withColumn("d", F.lit(hop))
             .join(visited.select("id"), ["id"], "left_anti")
-            .select("id", "d", "parent")
-            .localCheckpoint(eager=True)
+            .select("id", "d", "parent"),
+            n=F.count(F.lit(1)),
+            hit=F.count(F.when(F.col("id") == dst_id, 1)),
         )
-        if nxt.isEmpty():
+        if got["n"] == 0:
             break
-        visited = visited.unionByName(nxt).localCheckpoint(eager=True)
+        visited = visited.unionByName(nxt)
         frontier = nxt
-        if nxt.filter(F.col("id") == dst_id).count() > 0:
-            found = hop
+        if got["hit"]:
             break
     hit = visited.filter(F.col("id") == dst_id).collect()
     if not hit and src_id != dst_id:
@@ -2576,7 +2395,7 @@ def maximal_matching(
     Scale shape: per round, one endpoint-keyed MIN aggregate over
     live edges (partial agg absorbs hub fan-in), one broadcast-able
     join of the two endpoint minima back to edges, and one anti-join
-    to drop dead edges — checkpointed like the CC loop.
+    to drop dead edges — checkpointed per supersteps.py.
     """
     live = (
         _undirected(edges)
@@ -2710,10 +2529,7 @@ def katz_centrality(
     map-side); round k's frame is the (vertex, count) table, never
     the corpus.
     """
-    cu = _undirected(edges)
-    und = cu.select(
-        F.col("a").alias("src"), F.col("b").alias("dst")
-    ).unionByName(cu.select(F.col("b").alias("src"), F.col("a").alias("dst")))
+    und = _adjacency(edges)
     verts = und.select(F.col("src").alias("id")).distinct()
     cur = und.groupBy(F.col("dst").alias("id")).agg(
         F.count("*").alias("w")

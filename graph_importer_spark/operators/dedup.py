@@ -480,13 +480,13 @@ def dup_clusters(
     exactly once either way (the count rides along on the same
     checkpoint job CC needs anyway).
     """
-    from graph_importer_spark.cc import _checkpoint_fp, connected_components
+    from graph_importer_spark.cc import connected_components
+    from graph_importer_spark.supersteps import checkpoint
 
-    uv, (n_pairs, _) = _checkpoint_fp(
-        pairs.select(F.col(id1).alias("u"), F.col(id2).alias("v"))
+    edges, got = checkpoint(
+        pairs.select(F.col(id1).alias("src"), F.col(id2).alias("dst")), n=F.count(F.lit(1))
     )
-    edges = uv.select(F.col("u").alias("src"), F.col("v").alias("dst"))
-    labels = connected_components(edges, single_task=n_pairs <= small_graph_rows)
+    labels = connected_components(edges, single_task=got["n"] <= small_graph_rows)
     return labels.select(
         F.col("id").alias("doc_id"),
         F.col("component").alias("keeper"),

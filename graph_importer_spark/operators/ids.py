@@ -5,9 +5,11 @@ connected-components (see SCALE.md 'Collision budget'): two-pass, no
 collisions, no global sort, no driver data movement beyond one
 O(#partitions) collect.
 
-Pass 1: distinct keys, hash-partitioned by key; count per partition.
-Pass 2: per-partition rank (window ordered by key WITHIN the hash
-partition — no global exchange) + broadcast partition offsets.
+Pass 1: distinct keys, hash-partitioned by key and checkpointed once;
+count per partition.
+Pass 2, over the same checkpoint: per-partition rank (window ordered
+by key WITHIN the hash partition — no global exchange) + broadcast
+partition offsets.
 
 ids are dense in [0, n), deterministic for a fixed partition count
 (hash partitioning and within-partition order are both pure functions
@@ -23,30 +25,42 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from graph_importer_spark.supersteps import checkpoint
 
-def dense_ids(
-    df: DataFrame, col: str, num_partitions: int | None = None
+
+def _offset_ranks(
+    df: DataFrame, col: str, num_partitions: int | None, by_range: bool, out: str
 ) -> DataFrame:
-    """-> (``col``, id long) with ids dense in [0, n)."""
+    """(rows in earlier partitions) + (rank within the key's partition).
+
+    The partitioned keys are checkpointed once, so the offset collect and
+    the window pass read the SAME partition assignment — a range
+    partitioner samples its bounds per job, and two runs of the plan
+    would place boundary keys differently."""
     spark = df.sparkSession
     p = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    keys = df.select(col).distinct().repartition(p, F.col(col))
-    keyed = keys.withColumn("_pid", F.spark_partition_id())
+    keys = df.select(col).distinct()
+    keys = keys.repartitionByRange(p, F.col(col)) if by_range else keys.repartition(p, F.col(col))
+    keyed, _ = checkpoint(keys.withColumn("_pid", F.spark_partition_id()))
     counts = keyed.groupBy("_pid").agg(F.count("*").alias("_n")).collect()
-    offsets = {}
-    acc = 0
+    offsets, acc = [], 0
     for row in sorted(counts, key=lambda r: r["_pid"]):
-        offsets[row["_pid"]] = acc
+        offsets.append((row["_pid"], acc))
         acc += row["_n"]
-    off_df = spark.createDataFrame(
-        [(pid, off) for pid, off in offsets.items()], "_pid int, _off long"
-    )
+    off_df = spark.createDataFrame(offsets, "_pid int, _off long")
     w = Window.partitionBy("_pid").orderBy(col)
     return (
         keyed.withColumn("_rn", F.row_number().over(w))
         .join(F.broadcast(off_df), "_pid")
-        .select(col, (F.col("_off") + F.col("_rn") - 1).alias("id"))
+        .select(col, (F.col("_off") + F.col("_rn") - 1).alias(out))
     )
+
+
+def dense_ids(
+    df: DataFrame, col: str, num_partitions: int | None = None
+) -> DataFrame:
+    """-> (``col``, id long) with ids dense in [0, n), hash-partitioned."""
+    return _offset_ranks(df, col, num_partitions, False, "id")
 
 
 def sorted_ranks(
@@ -56,13 +70,12 @@ def sorted_ranks(
     (``row_number() OVER (ORDER BY col) - 1``) without an unpartitioned
     window.
 
-    Same two-pass shape as ``dense_ids`` but RANGE-partitioned: range
-    partition i holds keys strictly below partition i+1's, so
-    global rank = (rows in earlier partitions) + (rank within this
-    partition).  The per-partition window sorts ~n/p keys; the only
-    driver traffic is the O(p) offset collect.  The result is a pure
-    function of the key set — range boundary placement (sampled by
-    repartitionByRange) moves rows between partitions but cannot
+    ``dense_ids`` with a RANGE partitioner: range partition i holds keys
+    strictly below partition i+1's, so the offset + within-partition
+    rank is the global rank.  The per-partition window sorts ~n/p keys;
+    the only driver traffic is the O(p) offset collect.  The result is
+    a pure function of the key set — range boundary placement (sampled
+    by repartitionByRange) moves rows between partitions but cannot
     change any key's global rank — so SQL oracles replay it with a
     plain ORDER BY row_number.
 
@@ -70,24 +83,7 @@ def sorted_ranks(
     e.g. candidate lookup tables indexed by sorted-vocabulary position;
     dense_ids is cheaper when any stable dense id will do.
     """
-    spark = df.sparkSession
-    p = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    keys = df.select(col).distinct().repartitionByRange(p, F.col(col))
-    keyed = keys.withColumn("_pid", F.spark_partition_id())
-    counts = keyed.groupBy("_pid").agg(F.count("*").alias("_n")).collect()
-    offsets, acc = {}, 0
-    for row in sorted(counts, key=lambda r: r["_pid"]):
-        offsets[row["_pid"]] = acc
-        acc += row["_n"]
-    off_df = spark.createDataFrame(
-        [(pid, off) for pid, off in offsets.items()], "_pid int, _off long"
-    )
-    w = Window.partitionBy("_pid").orderBy(col)
-    return (
-        keyed.withColumn("_rn", F.row_number().over(w))
-        .join(F.broadcast(off_df), "_pid")
-        .select(col, (F.col("_off") + F.col("_rn") - 1).alias("rank"))
-    )
+    return _offset_ranks(df, col, num_partitions, True, "rank")
 
 
 def connected_components_dense(

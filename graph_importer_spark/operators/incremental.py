@@ -38,6 +38,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from graph_importer_spark.cc import connected_components_str
+from graph_importer_spark.supersteps import checkpoint
 
 
 def incremental_canonicalize(
@@ -57,8 +58,8 @@ def incremental_canonicalize(
     union-find task instead of one job per star round): per-round job
     latency dominates small deltas, and daily deltas are small relative
     to the map by definition.  The delta is checkpointed either way
-    (lineage truncation; the size rides the same job as an Observation,
-    so the gate costs no extra action).
+    (lineage truncation; the size rides the same job — see
+    ``supersteps.checkpoint`` — so the gate costs no extra action).
 
     Note: CALLING this function runs one Spark job (the delta
     checkpoint) — the size gate must see the count before the CC plan
@@ -67,8 +68,6 @@ def incremental_canonicalize(
     (streaming foreachBatch, contract) executes immediately anyway;
     flagged per the repo's no-silent-side-effects convention.
     """
-    from pyspark.sql import Observation
-
     touched = (
         new_edges.select(F.col("src").alias("name"))
         .unionByName(new_edges.select(F.col("dst").alias("name")))
@@ -84,14 +83,11 @@ def incremental_canonicalize(
             F.col("name").alias("src"), F.col("canonical").alias("dst")
         )
     )
-    obs = Observation()
-    delta = delta.observe(obs, F.count(F.lit(1)).alias("n")).localCheckpoint(
-        eager=True
-    )
+    delta, got = checkpoint(delta, n=F.count(F.lit(1)))
     comp = connected_components_str(
         delta,
         max_iter=max_iter,
-        single_task=int(obs.get["n"]) <= small_graph_rows,
+        single_task=int(got["n"]) <= small_graph_rows,
     )  # (name, canonical)
     comp = comp.select("name", F.col("canonical").alias("_comp"))
 

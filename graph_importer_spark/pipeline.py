@@ -39,6 +39,7 @@ from graph_importer_spark import linking as _linking
 from graph_importer_spark import mentions as _mentions
 from graph_importer_spark import triples as _triples
 from graph_importer_spark.materialize import GraphSpec, materialize_graph, triples_to_graph
+from graph_importer_spark.supersteps import checkpoint
 from graph_importer_spark.tables import GraphCatalog
 
 LINEAGE_TABLE = "_lineage"
@@ -228,16 +229,10 @@ class Pipeline:
         n^2/2^65 collision budget real, and one silent hash collision
         merges two unrelated entities forever.
         """
-        from pyspark.sql import Observation
-
-        obs = Observation()
-        pairs = (
-            linked.select("surface", "entity")
-            .distinct()
-            .observe(obs, F.count(F.lit(1)).alias("n"))
-            .localCheckpoint(eager=True)
+        pairs, got = checkpoint(
+            linked.select("surface", "entity").distinct(), n=F.count(F.lit(1))
         )
-        n_pairs = int(obs.get["n"])  # rides the checkpoint job — no count job
+        n_pairs = int(got["n"])  # rides the checkpoint job — no count job
         it_metrics: list[tuple[int, int]] = []
         hook = lambda i, n: it_metrics.append((i, n))  # noqa: E731
         use_dense = n_pairs > self.cfg.dense_id_threshold

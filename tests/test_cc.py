@@ -35,6 +35,14 @@ def test_two_long_chains_converge(spark):
     assert {lab[100 + i] for i in range(n)} == {100}
 
 
+def test_exhausted_budget_raises(spark):
+    # a 64-vertex path does not settle in one star round; a truncated
+    # labeling (63 of 64 labels wrong) must not be returned
+    edges = spark.createDataFrame([(i, i + 1) for i in range(63)], "src long, dst long")
+    with pytest.raises(RuntimeError, match="did not settle"):
+        connected_components(edges, max_iter=1)
+
+
 def test_permutation_and_direction_invariance(spark):
     edges = [(5, 3), (3, 9), (9, 7), (2, 8)]
     a = _labels(connected_components(spark.createDataFrame(edges, "src long, dst long")))

@@ -50,6 +50,16 @@ def test_closure_chain_depth_beats_rounds(spark):
     assert len(rows) == 45  # 9+8+...+1
 
 
+def test_closure_exhausted_budget_raises(spark):
+    # two doubling rounds reach paths of length <= 4 only (30 of the 45
+    # pairs); a truncated closure must not be returned
+    e = spark.createDataFrame(
+        [(i, i + 1) for i in range(9)], "src long, dst long"
+    )
+    with pytest.raises(RuntimeError, match="did not settle"):
+        transitive_closure(e, max_iter=2)
+
+
 # -- chain pattern -----------------------------------------------------------
 
 @pytest.fixture(scope="module")

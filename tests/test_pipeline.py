@@ -55,6 +55,29 @@ def test_end_to_end_dense_ids_path(spark, warehouse):
     assert recall >= 0.95, recall
 
 
+def test_iterative_cc_path_matches_single_task(spark, warehouse, tmp_path):
+    """small_cc_rows=0 forces canonicalization off the single-task
+    union-find onto the iterative xxhash-id star loop; the triples must
+    not change."""
+
+    def cc_iterations(p):
+        return (
+            p.cat.read("_metrics")
+            .filter((F.col("stage") == "canonicalize") & (F.col("metric") == "cc_iterations"))
+            .first()["value"]
+        )
+
+    def rows(p):
+        return sorted(map(tuple, p.triples().collect()))
+
+    pages, _, aliases = synth.corpus(spark, n_pages=60, n_entities=20)
+    default = run_pipeline(spark, pages, aliases, warehouse)
+    iterative = run_pipeline(spark, pages, aliases, str(tmp_path / "wh_iter"), small_cc_rows=0)
+    assert cc_iterations(default) == 0
+    assert cc_iterations(iterative) >= 1
+    assert rows(iterative) == rows(default)
+
+
 def test_byte_identical_text_stage(spark, warehouse):
     pages, _, aliases = synth.corpus(spark, n_pages=50, n_entities=20)
     p = run_pipeline(spark, pages, aliases, warehouse)
